@@ -23,6 +23,8 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from .geo.kernels import HAVERSINE_M_SQL as _HAVERSINE
+
 # deterministic synthetic lon/lat derived from event_id — identical integer
 # arithmetic on both engines (events has no coordinates of its own)
 LON_EXPR = "((event_id * 9973) % 36000) / 100.0 - 180.0"
@@ -104,19 +106,6 @@ def _rects_cte() -> str:
 
 def _pts_cte() -> str:
     return f"pts AS (SELECT event_id, {LON_EXPR} AS lon, {LAT_EXPR} AS lat FROM events)"
-
-
-# formula ORDER matches geo.kernels.haversine_m exactly — radians() per
-# coordinate FIRST, then the difference — so both engines evaluate the
-# identical IEEE expression bit-for-bit (round-3 ADVICE: the old
-# radians(lat2 - lat1) form differed by ~1 ulp, a latent flake at larger
-# scale factors where some pair could straddle the ROUND boundary)
-_HAVERSINE = (
-    "2.0 * 6371008.8 * asin(least(sqrt("
-    "pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + "
-    "cos(radians({lat1})) * cos(radians({lat2})) * "
-    "pow(sin((radians({lon2}) - radians({lon1})) / 2), 2)), 1.0))"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1985,6 +1974,7 @@ def oracle_sql() -> dict[str, str]:
         LISA_Z_SQL as _LISA_Z_SQL,
         MK_TREND_SQL as _MK_TREND_SQL,
         MK_Z_SQL as _MK_Z_SQL,
+        MORAN_E_SQL as _MORAN_E_SQL,
         MORAN_I_SQL as _MORAN_I_SQL,
     )
     from .operators.pointpattern import (
@@ -3094,7 +3084,7 @@ def oracle_sql() -> dict[str, str]:
                          CAST(SUM(x * x) AS BIGINT) AS s2 FROM cells)
             SELECT g.n AS n_cells, ea.w AS w_edges,
                    {_MORAN_I_SQL} AS moran_i_x1e9,
-                   CAST(ROUND((-1.0 / (n - 1)) * 1000000000) AS BIGINT) AS e_i_x1e9
+                   {_MORAN_E_SQL} AS e_i_x1e9
             FROM g, ea
         """,
         "ripley_k": f"""

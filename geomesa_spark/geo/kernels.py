@@ -95,6 +95,20 @@ def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
     return 2.0 * EARTH_RADIUS_M * np.arcsin(np.minimum(np.sqrt(h), 1.0))
 
 
+#: The engine's ONE haversine: :func:`haversine_m` as Spark SQL text over
+#: ``{lon1} {lat1} {lon2} {lat2}`` placeholders (``str.format``).  Same op
+#: order as the numpy kernel — radians() per coordinate FIRST, then the
+#: difference — so both evaluate the same IEEE sequence (the older
+#: radians(lat2 - lat1) form differed by ~1 ulp).  The DuckDB oracle embeds
+#: the same text; the numpy kernel stays the independent test oracle.
+HAVERSINE_M_SQL = (
+    "2.0 * 6371008.8 * asin(least(sqrt("
+    "pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + "
+    "cos(radians({lat1})) * cos(radians({lat2})) * "
+    "pow(sin((radians({lon2}) - radians({lon1})) / 2), 2)), 1.0))"
+)
+
+
 def segments_intersect(p1, p2, q1, q2) -> np.ndarray:
     """Proper-or-touching segment intersection test, broadcasting over the
     leading dimensions of the four (…, 2) point arrays."""

@@ -107,13 +107,27 @@ GI_STAR_SQL = (
 #: Global Moran's I from exact-integer edge/cell aggregates:
 #: n, s1=Σx, s2=Σx², w=|directed edges|, p=Σ_edges x_i·x_j,
 #: q=Σ_edges (x_i+x_j).  Expanding Σ(x_i−x̄)(x_j−x̄) = p − x̄·q + w·x̄²
-#: and Σ(x_i−x̄)² = s2 − n·x̄² keeps every input exact.
+#: and Σ(x_i−x̄)² = s2 − n·x̄² keeps every input exact.  Degenerate
+#: surfaces — one cell (n <= 1), no populated neighbours (w = 0) or a flat
+#: surface (zero variance) — would divide by zero -> +/-Inf -> ANSI CAST
+#: error; they carry no autocorrelation signal, so I = 0 there (both
+#: engines, same text, like GI_STAR_SQL).
 MORAN_I_SQL = (
+    "CASE WHEN n <= 1 OR w = 0"
+    " OR s2 - n * ((CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)) <= 0"
+    " THEN CAST(0 AS BIGINT) ELSE "
     "CAST(ROUND(((CAST(n AS DOUBLE) / w)"
     " * ((p - (CAST(s1 AS DOUBLE) / n) * q"
     "      + w * ((CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)))"
     "    / (s2 - n * ((CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)))))"
-    " * 1000000000) AS BIGINT)"
+    " * 1000000000) AS BIGINT) END"
+)
+
+#: Null expectation E[I] = −1/(n−1), quantized like MORAN_I_SQL; 0 for a
+#: single cell (same guard, shared with the oracle).
+MORAN_E_SQL = (
+    "CASE WHEN n <= 1 THEN CAST(0 AS BIGINT)"
+    " ELSE CAST(ROUND((-1.0 / (n - 1)) * 1000000000) AS BIGINT) END"
 )
 
 #: Mann-Kendall z with tie correction from exact integers: s_stat (sign
@@ -284,9 +298,7 @@ def morans_i(
             F.col("n").alias("n_cells"),
             F.col("w").alias("w_edges"),
             F.expr(MORAN_I_SQL).alias("moran_i_x1e9"),
-            F.expr(
-                "CAST(ROUND((-1.0 / (n - 1)) * 1000000000) AS BIGINT)"
-            ).alias("e_i_x1e9"),
+            F.expr(MORAN_E_SQL).alias("e_i_x1e9"),
         )
     )
 

@@ -477,7 +477,7 @@ def embedding_near_dup(
         den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
         return pd.Series(np.where(den > 0, num / den, 0.0))
 
-    # optimizer fence (see spatial_join.haversine_udf): without it the
+    # optimizer fence (see tube.tube_select): without it the
     # threshold filter clones the UDF and every candidate's FULL embedding
     # pair crosses Arrow twice
     return (

@@ -7,9 +7,10 @@ KNNQuery; mount empty at survey time — SURVEY.md §0).  Spark-first
 restatement: the query set is the SMALL side; each round, every still-
 unsatisfied query contributes a k-ring of cells (antimeridian-wrapping,
 pole-clamping — :func:`geomesa_spark.cells.k_ring`), the union becomes a
-broadcast (query_id, cell) frame equi-joined against the cell-encoded
-point table, candidates get exact haversine distances, and the per-query
-top-k survives.  A query terminates when its k-th candidate distance is
+broadcast (query_id, cell, query lon/lat) frame equi-joined against the
+cell-encoded point table, candidates get exact haversine distances (the
+engine's one haversine SQL text, JVM-side), and the per-query top-k
+survives.  A query terminates when its k-th candidate distance is
 PROVABLY inside the ring's guaranteed-covered radius; otherwise its ring
 radius doubles.  On a cell-partitioned table each round prunes to the
 ring's partitions — the scan cost is the ring, not the table.
@@ -83,18 +84,6 @@ def knn(
     centers = {q["query_id"]: (float(q["lon"]), float(q["lat"])) for q in queries}
     want_k = {q["query_id"]: int(q["k"]) for q in queries}
 
-    @F.pandas_udf("double")
-    def qdist(lon: pd.Series, lat: pd.Series, qid: pd.Series) -> pd.Series:
-        lons = lon.to_numpy(np.float64, na_value=np.nan)
-        lats = lat.to_numpy(np.float64, na_value=np.nan)
-        qids = qid.to_numpy(object)
-        out = np.full(len(lons), np.inf)
-        for q in pd.unique(qids):
-            m = qids == q
-            clon, clat = centers[q]
-            out[m] = kernels.haversine_m(lons[m], lats[m], clon, clat)
-        return pd.Series(out)
-
     n_side = 1 << res
     radius = {q: 1 for q in centers}
     best: dict[str, pd.DataFrame] = {}
@@ -111,13 +100,12 @@ def knn(
             clon, clat = centers[q]
             qcell = int(cells.encode(np.asarray([clon]), np.asarray([clat]), res)[0])
             ring = cells.k_ring(qcell, res, min(radius[q], n_side))
-            rows.append(pd.DataFrame({"query_id": q, "cell": ring}))
+            rows.append(pd.DataFrame({"query_id": q, "cell": ring, "_qlon": clon, "_qlat": clat}))
         cover = spark.createDataFrame(pd.concat(rows, ignore_index=True))
 
         from pyspark.sql import Window
 
-        cand = pts.join(F.broadcast(cover), "cell", "inner")
-        cand = cand.withColumn("dist_m", qdist(F.col("lon"), F.col("lat"), F.col("query_id")))
+        cand = _candidates(pts, cover)
         w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col(id_col).asc())
         topk = (
             cand.withColumn("rank", F.row_number().over(w))
@@ -147,6 +135,18 @@ def knn(
         else pd.DataFrame(columns=["query_id", "rank", id_col, "dist_m"])
     )
     return out.sort_values(["query_id", "rank"]).reset_index(drop=True)
+
+
+def _candidates(pts: DataFrame, cover: DataFrame) -> DataFrame:
+    """One expansion round's candidates: the cell-encoded points joined to
+    the broadcast (query_id, cell, _qlon, _qlat) cover, with the exact
+    great-circle ``dist_m`` to the query point."""
+    hav = kernels.HAVERSINE_M_SQL.format(lon1="lon", lat1="lat", lon2="_qlon", lat2="_qlat")
+    return (
+        pts.join(F.broadcast(cover), "cell", "inner")
+        .withColumn("dist_m", F.expr(hav))
+        .drop("_qlon", "_qlat")
+    )
 
 
 def knn_df(points: DataFrame, queries: list[dict], res: int = 7, id_col: str = "event_id") -> DataFrame:

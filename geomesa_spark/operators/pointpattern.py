@@ -15,8 +15,8 @@ the region is the |lat| <= ``lat_max`` band (default 60 deg), inside
 which a +/-1 cell ring at the chosen resolution provably covers every
 pair within ``d_max`` (guarded at plan time — see `_require_ring_cover`).
 A truly global run should use the lat-aware k-ring of
-`spatial_join.ring_cells_udf`; the band keeps the ORACLE expressible as
-the identical SQL ring join.
+`spatial_join.add_ring_cells` (the ``dist_m`` grid join); the band keeps
+the ORACLE expressible as the identical SQL ring join.
 
 Parallelism note: when Spark broadcasts the keyed side of a pair join,
 the heavy stage's task count is the PROBE side's split count — a small
@@ -28,9 +28,9 @@ inputs should be repartitioned to fleet parallelism first (the
 entry_queries._event_points idiom).
 
 Float discipline (repo-wide rule): pair counts, n, and time deltas are
-exact BIGINTs; distances use the module haversine SQL template — the
-SAME text the DuckDB oracle embeds (asserted in tests against
-`entry_queries._HAVERSINE`) — and each derived statistic (K, L, Knox
+exact BIGINTs; distances use the engine's one haversine SQL text
+(`geo.kernels.HAVERSINE_M_SQL`, re-exported here) — the SAME text the
+DuckDB oracle embeds — and each derived statistic (K, L, Knox
 expectation/z) is ONE closed-form double expression generated by a
 shared `*_sql()` function, so both engines run the identical IEEE-754
 sequence and quantized outputs match bit-for-bit.
@@ -42,19 +42,9 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..geo.kernels import EARTH_RADIUS_M, HAVERSINE_M_SQL
+
 __all__ = ["ripley_k", "cross_k", "nn_g_function", "knox_test", "HAVERSINE_M_SQL"]
-
-EARTH_RADIUS_M = 6371008.8
-_DEG_M = math.pi * EARTH_RADIUS_M / 180.0
-
-#: Same text as entry_queries._HAVERSINE / same op order as
-#: geo.kernels.haversine_m — parity asserted in tests/test_pointpattern.py.
-HAVERSINE_M_SQL = (
-    "2.0 * 6371008.8 * asin(least(sqrt("
-    "pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + "
-    "cos(radians({lat1})) * cos(radians({lat2})) * "
-    "pow(sin((radians({lon2}) - radians({lon1})) / 2), 2)), 1.0))"
-)
 
 
 def band_area_m2(lat_max: float) -> float:
@@ -148,15 +138,23 @@ def wrap_ring_sql(res: int) -> str:
 
 
 def _require_ring_cover(res: int, lat_max: float, d_max_m: float) -> None:
-    n_side = 1 << res
-    cell_lat_m = (180.0 / n_side) * _DEG_M
-    cell_lon_m = (360.0 / n_side) * _DEG_M * math.cos(math.radians(lat_max))
-    if d_max_m > min(cell_lat_m, cell_lon_m):
+    """A pair within ``d_max_m`` inside the band is at most one cell apart
+    on each axis.  Latitude: the pair spans at most d/R radians.
+    Longitude: with both points at |lat| <= phi the widest span is two
+    points on the band edge, 2*asin(sin(d/2R)/cos phi) — the great-circle
+    span, which exceeds the linear d/(R cos phi) (at res 6 / lat 60 a
+    312.7 km pair spans 5.626 deg against a 5.625 deg cell)."""
+    cell_deg = 180.0 / (1 << res)
+    sin_half_dlon = math.sin(d_max_m / (2.0 * EARTH_RADIUS_M)) / math.cos(math.radians(lat_max))
+    lon_span = math.degrees(2.0 * math.asin(sin_half_dlon)) if sin_half_dlon < 1.0 else 360.0
+    lat_span = math.degrees(d_max_m / EARTH_RADIUS_M)
+    if lat_span > cell_deg or lon_span > 2.0 * cell_deg:
         raise ValueError(
             f"d_max={d_max_m} m exceeds the +/-1-ring guarantee at res={res}, "
-            f"lat_max={lat_max} (cell {cell_lat_m:.0f} x {cell_lon_m:.0f} m); "
-            "coarsen res, shrink the window, or use the lat-aware k-ring "
-            "join (spatial_join.ring_cells_udf)"
+            f"lat_max={lat_max} (pair span {lon_span:.4f} x {lat_span:.4f} deg, "
+            f"cell {2.0 * cell_deg:.4f} x {cell_deg:.4f} deg); coarsen res, "
+            "shrink the window, or use the lat-aware k-ring join "
+            "(spatial_join.spatial_join_grid with dist_m)"
         )
 
 

@@ -22,7 +22,11 @@ survey time, SURVEY.md §0):
 - the grid-partitioned join (``GeoMesaJoinRelation`` + ``RelationUtils``
   envelope partitioning) → here: both big sides cell-encoded and
   shuffle-joined on ``cell`` with AQE skew splitting; hot cells are
-  additionally salted (``salt_hot_cells``).
+  additionally salted (``salt_hot_cells``).  The distance joins (grid,
+  space-time, dwithin) are 100 % JVM as well: the lat-aware k-ring is a
+  Catalyst ``sequence`` explode (:func:`add_ring_cells`) and the exact
+  refine is the one haversine SQL text (``kernels.HAVERSINE_M_SQL``),
+  which Catalyst fuses into the join condition.
 
 Semantics traps preserved (SURVEY.md §4.4):
 - duplicate candidates: cover cells PARTITION space, so duplicates arise
@@ -315,12 +319,18 @@ def add_cell_column(
     referenced twice), so codegen emits each step once as a local.
     Bit-identical to :func:`geomesa_spark.cells.encode` (parity-tested).
     """
+    return _interleave_xy(_grid_xy(df, res, lon, lat), out)
+
+
+def _grid_xy(df: DataFrame, res: int, lon: str, lat: str) -> DataFrame:
+    """Drop null/NaN coordinates, then add the clamped grid column/row
+    ``_gx``/``_gy`` at ``res``."""
     lon_c, lat_c = F.col(lon), F.col(lat)
     d = df.filter(
         lon_c.isNotNull() & lat_c.isNotNull() & ~F.isnan(lon_c) & ~F.isnan(lat_c)
     )
     n = 1 << res
-    d = d.withColumn(
+    return d.withColumn(
         "_gx",
         F.least(
             F.greatest(F.floor((lon_c + F.lit(180.0)) / F.lit(360.0) * F.lit(n)), F.lit(0)),
@@ -333,12 +343,68 @@ def add_cell_column(
             F.lit(n - 1),
         ).cast("long"),
     )
+
+
+def _interleave_xy(d: DataFrame, out: str) -> DataFrame:
+    """Morton-interleave ``_gx``/``_gy`` into ``out`` (and drop them) as
+    chained projections — see :func:`add_cell_column` for why."""
     for c in ("_gx", "_gy"):
         for s, m in _SPREAD_MASKS:
             d = d.withColumn(c, (F.col(c).bitwiseOR(F.shiftleft(F.col(c), s))).bitwiseAND(F.lit(m)))
     return d.withColumn(out, F.col("_gx").bitwiseOR(F.shiftleft(F.col("_gy"), 1))).drop(
         "_gx", "_gy"
     )
+
+
+def add_ring_cells(df: DataFrame, res: int, dist_m: float) -> DataFrame:
+    """One row per ``cell`` of the COMPLETE k-ring cover for a
+    ``dist_m``-radius join at ``res`` (the left side of the grid joins),
+    as pure Catalyst: two ``sequence`` explodes and the Morton chain.
+
+    Ring radii in CELLS that guarantee completeness at this res: lat
+    cells are 180/2^res deg high → ky = ceil(d_deg / cell_deg); lon
+    cells are 2× wider in degrees but shrink by cos(lat) in meters →
+    kx = ceil(d_deg / (2·cell_deg·cos_band)) with cos taken at the
+    poleward edge of the ky band (covers the worst partner latitude),
+    capped at n/2.  Tight: a 50 km join at res 8 emits a 3×3 ring at the
+    equator, not 5×5.
+
+    No cell repeats within a row's ring, so a (left row, right row) pair
+    collides on at most one cell: columns wrap (pmod n) with dx capped
+    at n-1-kx, so kx = n/2 does not reach its own column twice; rows past
+    a pole are dropped, not clamped (the clamped row is already in the
+    ring).  Null/NaN coordinates drop out, as in :func:`add_cell_column`.
+    """
+    n = 1 << res
+    cell_deg = 180.0 / n
+    d_deg = float(np.degrees(dist_m / kernels.EARTH_RADIUS_M))
+    ky = int(np.ceil(d_deg / cell_deg))
+    band = F.least(F.abs(F.col("lat")) + F.lit(d_deg), F.lit(89.999))
+    cos_band = F.greatest(F.cos(F.radians(band)), F.lit(1e-6))
+    kx = F.col("_kx")
+    gy = F.col("_gy")
+    d = (
+        _grid_xy(df, res, "lon", "lat")
+        .withColumn(
+            "_kx",
+            F.least(F.ceil(F.lit(d_deg) / (F.lit(2.0 * cell_deg) * cos_band)), F.lit(n // 2)),
+        )
+        .withColumn("_dx", F.explode(F.sequence(-kx, F.least(kx, F.lit(n - 1) - kx))))
+        .withColumn(
+            "_dy",
+            F.explode(
+                F.sequence(F.greatest(F.lit(-ky), -gy), F.least(F.lit(ky), F.lit(n - 1) - gy))
+            ),
+        )
+        .withColumn("_gx", F.pmod(F.col("_gx") + F.col("_dx"), F.lit(n)))
+        .withColumn("_gy", gy + F.col("_dy"))
+        .drop("_kx", "_dx", "_dy")
+    )
+    return _interleave_xy(d, "cell")
+
+
+def _haversine(lon1: str, lat1: str, lon2: str, lat2: str) -> F.Column:
+    return F.expr(kernels.HAVERSINE_M_SQL.format(lon1=lon1, lat1=lat1, lon2=lon2, lat2=lat2))
 
 
 def extract_geo_points(docs: DataFrame) -> DataFrame:
@@ -551,30 +617,23 @@ def dwithin_join_broadcast(
         cc, r = cells.cover_point_radius(float(c["lon"]), float(c["lat"]), dist_m, res)
         covers[c[center_id_col]] = (cc, r)
         res_common = min(res_common, r)
+    lonlat = {c[center_id_col]: (float(c["lon"]), float(c["lat"])) for c in centers}
     for cid, (cc, r) in covers.items():
         cc = np.unique(cells.parent(cc, r - res_common)) if r > res_common else cc
-        rows.append(pd.DataFrame({center_id_col: cid, "cell": cc}))
+        rows.append(
+            pd.DataFrame({center_id_col: cid, "cell": cc,
+                          "_clon": lonlat[cid][0], "_clat": lonlat[cid][1]})
+        )
     cover_pdf = pd.concat(rows, ignore_index=True).drop_duplicates()
     cover_df = spark.createDataFrame(cover_pdf)
-    lonlat = {c[center_id_col]: (float(c["lon"]), float(c["lat"])) for c in centers}
-
-    @F.pandas_udf("double")
-    def dist_to_center(lon: pd.Series, lat: pd.Series, cid: pd.Series) -> pd.Series:
-        lons = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-        lats = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-        cids = cid.to_numpy(dtype=object)
-        out = np.full(len(lons), np.inf)
-        for p in pd.unique(cids):
-            m = cids == p
-            clon, clat = lonlat[p]
-            out[m] = kernels.haversine_m(lons[m], lats[m], clon, clat)
-        return pd.Series(out)
 
     pts = add_cell_column(points, res_common)
     joined = pts.join(F.broadcast(cover_df), "cell", "inner")
-    joined = joined.withColumn(
-        "dist_m", dist_to_center(F.col("lon"), F.col("lat"), F.col(center_id_col))
-    ).filter(F.col("dist_m") <= float(dist_m))
+    joined = (
+        joined.withColumn("dist_m", _haversine("lon", "lat", "_clon", "_clat"))
+        .filter(F.col("dist_m") <= float(dist_m))
+        .drop("_clon", "_clat")
+    )
     return joined if unique_ids else joined.dropDuplicates([id_col, center_id_col])
 
 
@@ -597,8 +656,8 @@ def spatial_join_grid(
     side explodes to the k-ring needed to make the cover complete for that
     radius, and an exact haversine refine follows.
 
-    The per-row k-ring is np.unique'd and a right row has ONE cell, so a
-    (left row, right row) pair matches at most once — with row-unique ids
+    The per-row k-ring has no repeated cell and a right row has ONE cell,
+    so a (left row, right row) pair matches at most once — with row-unique ids
     (``unique_ids=True``) the post-refine ``dropDuplicates`` exchange is
     provably dead and skipped: the join then has exactly the two
     unavoidable shuffles (one per side).
@@ -615,7 +674,7 @@ def spatial_join_grid(
     plan change for unskewed data.  Pass ``None`` to force it off, or an
     int to pin the threshold.
     """
-    l = add_cell_column(left, res)
+    l = add_cell_column(left, res) if dist_m is None else add_ring_cells(left, res, dist_m)
     r = add_cell_column(right, res)
 
     if salt_threshold == "auto":
@@ -627,11 +686,6 @@ def spatial_join_grid(
         hottest_est = probe[0]["count"] / 0.05 if probe else 0
         salt_threshold = AUTO_SALT_TASK_ROWS if hottest_est > AUTO_SALT_TASK_ROWS else None
 
-    if dist_m is not None:
-        l = l.withColumn(
-            "cell", F.explode(ring_cells_udf(res, dist_m)(F.col("lon"), F.col("lat")))
-        )
-
     if salt_threshold is not None:
         l, r = salt_hot_cells(l, r, salt_threshold, id_col=left_id)
         joined = l.join(r.withColumnRenamed("lon", "lon_r").withColumnRenamed("lat", "lat_r"),
@@ -642,101 +696,12 @@ def spatial_join_grid(
         )
 
     if dist_m is not None:
-        joined = joined.withColumn(
-            "dist_m",
-            haversine_udf()(F.col("lon"), F.col("lat"), F.col("lon_r"), F.col("lat_r")),
-        ).filter(F.col("dist_m") <= float(dist_m))
+        joined = joined.withColumn("dist_m", _haversine("lon", "lat", "lon_r", "lat_r")).filter(
+            F.col("dist_m") <= float(dist_m)
+        )
         if not unique_ids:
             joined = joined.dropDuplicates([left_id, right_id])
     return joined
-
-
-def ring_cells_udf(res: int, dist_m: float):
-    """array<long> pandas UDF: the COMPLETE k-ring cell cover for a
-    ``dist_m``-radius join at ``res`` (shared by the grid joins).
-
-    Ring radii in CELLS that guarantee completeness at this res: lat
-    cells are 180/2^res deg high → ky = ceil(d_deg / cell_deg); lon
-    cells are 2× wider in degrees but shrink by cos(lat) in meters →
-    kx = ceil(d_deg / (2·cell_deg·cos_band)) with cos taken at the
-    poleward edge of the ky band (covers the worst partner latitude).
-    Tight: a 50 km join at res 8 emits a 3×3 ring at the equator, not
-    5×5."""
-    cell_deg = 180.0 / (1 << res)
-    d_deg = float(np.degrees(dist_m / kernels.EARTH_RADIUS_M))
-    ky = int(np.ceil(d_deg / cell_deg))
-
-    @F.pandas_udf("array<long>")
-    def ring_cells(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        lons = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-        lats = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-        n = np.int64(1) << np.int64(res)
-        x, y = cells.lonlat_to_xy(lons, lats, res)
-        band = np.minimum(np.abs(lats) + d_deg, 89.999)
-        cos_band = np.maximum(np.cos(np.radians(band)), 1e-6)
-        kx = np.minimum(
-            np.ceil(d_deg / (2.0 * cell_deg * cos_band)).astype(np.int64), n // 2
-        )
-        out: list = [None] * len(lons)
-        dys = np.arange(-ky, ky + 1, dtype=np.int64)
-        # group rows by kx (few distinct values) → fully vectorized
-        # meshgrid per group, no per-row numpy calls
-        for kxv in np.unique(kx):
-            m = (kx == kxv) & (x >= 0)
-            if not m.any():
-                continue
-            dxs = np.arange(-kxv, kxv + 1, dtype=np.int64)
-            gx = np.mod(x[m][:, None, None] + dxs[None, :, None], n)
-            gy = np.clip(y[m][:, None, None] + dys[None, None, :], 0, n - 1)
-            flat = cells.interleave(
-                np.broadcast_to(gx, (int(m.sum()), len(dxs), len(dys))).reshape(-1),
-                np.broadcast_to(gy, (int(m.sum()), len(dxs), len(dys))).reshape(-1),
-            ).reshape(int(m.sum()), -1)
-            # clip can duplicate cells at poles: dedupe VECTORIZED but
-            # COMPACT — sort each row, drop repeats via one boolean
-            # mask, then slice the surviving flat buffer back into
-            # per-row arrays (round-2 verdict item 8 replaced a
-            # per-row np.unique Python loop; round 3 measured the
-            # intermediate "-1 marker + post-explode filter" variant
-            # ~2x slower end-to-end on the 50 km grid join — padded
-            # rows inflate every Arrow batch and explode — so the
-            # dedupe now emits exact-length rows with no padding)
-            flat.sort(axis=1)
-            keep = np.ones(flat.shape, dtype=bool)
-            keep[:, 1:] = flat[:, 1:] != flat[:, :-1]
-            counts = keep.sum(axis=1)
-            pieces = np.split(flat[keep], np.cumsum(counts)[:-1])
-            for row_i, ring in zip(np.nonzero(m)[0], pieces):
-                out[row_i] = ring
-        for i in range(len(out)):
-            if out[i] is None:
-                out[i] = np.empty(0, dtype=np.int64)
-        return pd.Series(out)
-
-    return ring_cells
-
-
-def haversine_udf():
-    """double pandas UDF over (lon1, lat1, lon2, lat2) — the exact
-    great-circle refine shared by the grid joins.
-
-    Marked nondeterministic (it isn't — the flag is an optimizer fence):
-    with the default flag Catalyst pushes the ``dist_m <= d`` filter
-    through the projection that defines ``dist_m`` and DUPLICATES the
-    Python UDF — one ArrowEvalPython on every candidate for the filter,
-    a second on every survivor for the output column.  The fence keeps
-    one evaluation (plan-asserted in tests)."""
-
-    @F.pandas_udf("double")
-    def hav(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-        return pd.Series(
-            kernels.haversine_m(
-                lon1.to_numpy(np.float64), lat1.to_numpy(np.float64),
-                lon2.to_numpy(np.float64), lat2.to_numpy(np.float64),
-            )
-        )
-
-    return hav.asNondeterministic()
 
 
 def spatiotemporal_join_grid(
@@ -774,18 +739,13 @@ def spatiotemporal_join_grid(
     Returns matched pairs + ``dist_m`` / ``dt_s`` columns.
     """
     w = int(max_dt_s)
-    l = add_cell_column(left, res).withColumn(
-        "_ts_s", F.unix_timestamp(F.col(ts_col).cast("timestamp"))
+    ts_s = F.unix_timestamp(F.col(ts_col).cast("timestamp"))
+    tbin = F.floor(F.col("_ts_s") / F.lit(w)).cast("long")
+    l = add_ring_cells(
+        left.withColumn("_ts_s", ts_s).withColumn("tbin", tbin), res, dist_m
     )
-    r = add_cell_column(right, res).withColumn(
-        "_ts_s", F.unix_timestamp(F.col(ts_col).cast("timestamp"))
-    )
-    rb = F.floor(F.col("_ts_s") / F.lit(w)).cast("long")
-    r = r.withColumn("tbin", F.explode(F.array(rb - 1, rb, rb + 1)))
-    l = l.withColumn(
-        "cell", F.explode(ring_cells_udf(res, dist_m)(F.col("lon"), F.col("lat")))
-    )
-    l = l.withColumn("tbin", F.floor(F.col("_ts_s") / F.lit(w)).cast("long"))
+    r = add_cell_column(right, res).withColumn("_ts_s", ts_s)
+    r = r.withColumn("tbin", F.explode(F.array(tbin - 1, tbin, tbin + 1)))
     joined = l.join(
         r.withColumnRenamed("lon", "lon_r")
         .withColumnRenamed("lat", "lat_r")
@@ -795,10 +755,7 @@ def spatiotemporal_join_grid(
         "inner",
     )
     joined = (
-        joined.withColumn(
-            "dist_m",
-            haversine_udf()(F.col("lon"), F.col("lat"), F.col("lon_r"), F.col("lat_r")),
-        )
+        joined.withColumn("dist_m", _haversine("lon", "lat", "lon_r", "lat_r"))
         .withColumn("dt_s", F.abs(F.col("_ts_s") - F.col("_ts_s_r")))
         .filter((F.col("dist_m") <= float(dist_m)) & (F.col("dt_s") <= w))
     )

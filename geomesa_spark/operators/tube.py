@@ -98,9 +98,12 @@ def tube_select(
             )
         )
 
-    # optimizer fence (see spatial_join.haversine_udf): without it the
-    # threshold filter splits the UDF into per-candidate + per-survivor
-    # ArrowEvalPython copies
+    # optimizer fence: the UDF is deterministic, but with the default flag
+    # Catalyst pushes the ``tube_dist_m <= buffer`` filter through the
+    # projection that defines the column and DUPLICATES the Python UDF —
+    # one ArrowEvalPython on every candidate for the filter, a second on
+    # every survivor for the output column.  Marking it nondeterministic
+    # keeps one evaluation.  (The repo's other Python refines point here.)
     tube_dist = tube_dist.asNondeterministic()
     pts = spatial_join.add_cell_column(candidates, res)
     joined = pts.join(F.broadcast(cover_df), "cell", "inner")
@@ -224,7 +227,7 @@ def route_join(
                 dist[m], bear[m] = kernels.point_segments_nearest(lons[m], lats[m], segs[rr])
             return pd.DataFrame({"dist": dist, "bearing": bear})
 
-        # optimizer fence: one evaluation (see spatial_join.haversine_udf)
+        # optimizer fence: one evaluation (see tube_select)
         cand = cand.withColumn(
             "_near",
             route_near.asNondeterministic()(F.col("lon"), F.col("lat"), F.col("route_id")),
@@ -242,7 +245,7 @@ def route_join(
             & F.coalesce(delta <= float(max_heading_delta_deg), F.lit(True))
         ).drop("_near")
     else:
-        # optimizer fence: one route_dist evaluation (see spatial_join.haversine_udf)
+        # optimizer fence: one route_dist evaluation (see tube_select)
         cand = cand.withColumn(
             "route_dist_m",
             route_dist.asNondeterministic()(F.col("lon"), F.col("lat"), F.col("route_id")),

@@ -112,6 +112,38 @@ def test_morans_i_matches_textbook_formula(spark):
     assert row["moran_i_x1e9"] > 0
 
 
+@pytest.mark.parametrize(
+    "centres",
+    [
+        # flat: a 3x3 block of cells with 2 points each (zero variance)
+        [(cx, cy) for cx in (3, 4, 5) for cy in (6, 7, 8) for _ in range(2)],
+        # all-isolated: populated cells two apart (no edges, w = 0)
+        [(cx, cy) for cx in (2, 5, 8) for cy in (3, 9) for _ in range(1 + cx % 3)],
+        # a single populated cell (n = 1)
+        [(7, 7)] * 3,
+    ],
+    ids=["flat", "isolated", "single_cell"],
+)
+def test_morans_i_degenerate_surfaces(spark, centres):
+    """Zero variance, zero weight or one cell used to divide by zero
+    (+/-Inf -> ANSI CAST error); the guarded expressions return 0."""
+    import pandas as pd
+
+    w = 360.0 / SIDE
+    h = 180.0 / SIDE
+    pdf = pd.DataFrame({
+        "lon": [-180.0 + (cx + 0.5) * w for cx, _ in centres],
+        "lat": [-90.0 + (cy + 0.5) * h for _, cy in centres],
+    })
+    row = autocorr.morans_i(spark.createDataFrame(pdf), res=RES).collect()[0]
+    cells = _np_cells(pdf["lon"].to_numpy(), pdf["lat"].to_numpy())
+    n = len(cells)
+    w = sum(k in cells for key in cells for k in _neighbors(key, include_self=False))
+    assert (row["n_cells"], row["w_edges"]) == (n, w)
+    assert row["moran_i_x1e9"] == 0
+    assert row["e_i_x1e9"] == (0 if n <= 1 else round(-1.0 / (n - 1) * 1e9))
+
+
 def test_local_morans_i_matches_textbook(spark):
     df, lon, lat = _pts(spark)
     got = {

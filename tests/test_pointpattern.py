@@ -163,10 +163,55 @@ def test_knox_matches_bruteforce(spark):
 
 
 def test_haversine_sql_text_matches_oracle_template(spark):
+    """One haversine text: the engine, the point-pattern module and the
+    DuckDB oracle all reference geo.kernels.HAVERSINE_M_SQL, and Spark's
+    evaluation of it tracks the numpy kernel (the independent oracle) on
+    random, antipodal, polar and +/-180 pairs."""
     from geomesa_spark import entry_queries
+    from geomesa_spark.geo import kernels
 
-    kw = dict(lon1="alon", lat1="alat", lon2="blon", lat2="blat")
-    assert pp.HAVERSINE_M_SQL.format(**kw) == entry_queries._HAVERSINE.format(**kw)
+    assert pp.HAVERSINE_M_SQL is kernels.HAVERSINE_M_SQL
+    assert entry_queries._HAVERSINE is kernels.HAVERSINE_M_SQL
+
+    rng = np.random.default_rng(5)
+    n = 10_000
+    lon1, lat1 = rng.uniform(-180, 180, n), rng.uniform(-90, 90, n)
+    lon2, lat2 = rng.uniform(-180, 180, n), rng.uniform(-90, 90, n)
+    k = n // 10
+    lon2[:k] = ((lon1[:k] + 360.0) % 360.0) - 180.0     # antipodal
+    lat2[:k] = -lat1[:k]
+    lat1[k:2 * k] = rng.choice([-90.0, 90.0], k)         # poles
+    lat2[2 * k:3 * k] = rng.uniform(89.0, 90.0, k)       # near-polar
+    lon1[3 * k:4 * k] = 180.0                            # +/-180 seam
+    lon2[3 * k:4 * k] = -180.0 + rng.uniform(0.0, 1.0, k)
+    lon1[4 * k:5 * k] = -180.0
+    lon2[4 * k:5 * k] = 180.0
+    lat2[4 * k:5 * k] = lat1[4 * k:5 * k]                # same point, 0 m
+    pdf = pd.DataFrame({"i": np.arange(n), "lon1": lon1, "lat1": lat1,
+                        "lon2": lon2, "lat2": lat2})
+    got = (
+        spark.createDataFrame(pdf)
+        .select("i", F.expr(kernels.HAVERSINE_M_SQL.format(
+            lon1="lon1", lat1="lat1", lon2="lon2", lat2="lat2")).alias("d"))
+        .toPandas().sort_values("i")["d"].to_numpy()
+    )
+    exp = kernels.haversine_m(lon1, lat1, lon2, lat2)
+    delta = np.abs(got - exp)
+    # JVM trig may differ from libm in the last ulp, so no bit-equality
+    # assert; the count is reported for the record.  Near the antipode
+    # asin's slope 1/sqrt(1-h) turns one ulp of h into up to 0.2 m (past
+    # 1e-6 m within ~20 km of it; 50 km margin here), so there the two
+    # must agree on h itself instead.
+    r = kernels.EARTH_RADIUS_M
+    near_antipode = np.pi * r - exp < 50_000.0
+    print(f"haversine SQL vs numpy: {int((got != exp).sum())}/{n} pairs not "
+          f"bit-equal, max |delta| {delta[~near_antipode].max():.3e} m "
+          f"({int(near_antipode.sum())} near-antipodal pairs: max |delta| "
+          f"{delta[near_antipode].max():.3e} m)")
+    assert delta[~near_antipode].max() <= 1e-6
+    h_got = np.sin(got[near_antipode] / (2.0 * r)) ** 2
+    h_exp = np.sin(exp[near_antipode] / (2.0 * r)) ** 2
+    assert np.abs(h_got - h_exp).max() <= 4 * np.spacing(1.0)
 
 
 def test_ring_cover_guard():
@@ -174,6 +219,57 @@ def test_ring_cover_guard():
         pp.ripley_k(None, (500_000.0,), res=6, lat_max=60.0)
     with pytest.raises(ValueError):
         pp.knox_test(None, dist_m=200_000.0, res=6, lat_max=80.0)
+
+
+def _lon_span_deg(d_m, lat):
+    """Longitude span of two points on latitude ``lat`` that are exactly
+    ``d_m`` apart (great circle)."""
+    r = 6371008.8
+    return math.degrees(2.0 * math.asin(math.sin(d_m / (2.0 * r)) / math.cos(math.radians(lat))))
+
+
+def test_ring_cover_guard_great_circle_bound(spark):
+    """The +/-1-ring guard uses the great-circle longitude span, not the
+    linear arc.  At res 6 / lat 60 the linear bound admitted d up to
+    312.7 km, where a pair on the band edge spans 2 cell columns (the
+    ring misses it, and the DuckDB oracle shares the ring, so only numpy
+    brute force shows it).  Just inside the exact bound every pair is
+    found."""
+    cell_lon = 360.0 / (1 << RES)
+    d_linear = cell_lon * math.pi * 6371008.8 / 180.0 * math.cos(math.radians(LAT_MAX))
+    d_bad = 312_700.0
+    assert d_bad < d_linear  # the old linear guard accepted it
+    # brute force: a within-d_bad pair on lat 60, two cell columns apart
+    b = 5 * cell_lon - 180.0
+    a_lon, b_lon = b - 0.0004, b - 0.0004 + 5.6258
+    assert _hav_matrix(np.array([a_lon, b_lon]), np.array([60.0, 60.0]))[0, 1] <= d_bad
+    col = np.floor((np.array([a_lon, b_lon]) + 180.0) / cell_lon)
+    assert col[1] - col[0] == 2
+    with pytest.raises(ValueError):
+        pp.ripley_k(None, (d_bad,), res=RES, lat_max=LAT_MAX)
+
+    # exact bound: the span equals one cell width; whole metres (the
+    # ladder compares at int(d)) just inside it
+    d_ok = float(math.floor(2.0 * 6371008.8 * math.asin(
+        math.cos(math.radians(LAT_MAX)) * math.sin(math.radians(cell_lon / 2.0))
+    )) - 1)
+    span = _lon_span_deg(d_ok, LAT_MAX)
+    assert span <= cell_lon
+    rng = np.random.default_rng(3)
+    m = 80
+    cols = rng.integers(0, 1 << RES, m)
+    a = (cols * cell_lon - 180.0) - rng.uniform(0.0, 0.002, m)
+    lon = np.concatenate([a, a + span * (1.0 - 1e-9)])
+    lon = ((lon + 180.0) % 360.0) - 180.0
+    lat = np.full(2 * m, LAT_MAX)
+    pdf = pd.DataFrame({"event_id": np.arange(2 * m, dtype=np.int64), "lon": lon, "lat": lat})
+    dm = _hav_matrix(lon, lat)
+    iu = np.triu_indices(2 * m, k=1)
+    exp = int((dm[iu] <= d_ok).sum())
+    near = int(((dm[iu] <= d_ok) & (dm[iu] > d_ok - 1.0)).sum())
+    assert near >= m // 2  # the fixture really sits at the bound
+    row = pp.ripley_k(spark.createDataFrame(pdf), (d_ok,), res=RES, lat_max=LAT_MAX).collect()[0]
+    assert row["pairs"] == exp
 
 
 def test_pointpattern_plan_shape(spark):

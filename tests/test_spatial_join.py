@@ -7,6 +7,7 @@ import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
+from geomesa_spark import cells
 from geomesa_spark.geo import kernels, wkt
 from geomesa_spark.operators import spatial_join as sj
 from geomesa_spark.sources import corpus
@@ -415,17 +416,85 @@ def test_spatiotemporal_unique_ids_no_duplicates(spark):
     assert len(pairs) == len(set(pairs)) and len(pairs) > n  # no dup rows
 
 
-def test_haversine_refine_single_evaluation(spark):
-    """The dist_m refine UDF must appear ONCE in the physical plan — the
-    deterministic flag lets Catalyst split it into a per-candidate filter
-    copy plus a per-survivor projection copy (round-3 plan audit)."""
-    import pandas as pd
+def test_distance_joins_have_no_python_eval(spark):
+    """The distance joins are pure Catalyst: the k-ring is a sequence
+    explode and the refine the one haversine SQL text, so no executed
+    plan (grid plain and salted, space-time, dwithin, the kNN candidate
+    frame) holds a Python evaluation node."""
+    from geomesa_spark.operators import knn as knn_op
 
-    a = pd.DataFrame({"doc_id": ["a"], "lon": [0.0], "lat": [0.0]})
-    b = pd.DataFrame({"event_id": ["b"], "lon": [0.1], "lat": [0.1]})
-    j = sj.spatial_join_grid(
-        spark.createDataFrame(a), spark.createDataFrame(b),
-        res=7, dist_m=50_000.0, unique_ids=True, salt_threshold=None,
-    )
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("hav(") == 1
+    rng = np.random.default_rng(4)
+    t0 = pd.Timestamp("2024-03-01 00:00:00")
+    a = spark.createDataFrame(pd.DataFrame({
+        "doc_id": [f"a{i}" for i in range(200)],
+        "lon": rng.uniform(-3, 3, 200), "lat": rng.uniform(-3, 3, 200),
+        "ts": [t0 + pd.Timedelta(seconds=int(x)) for x in rng.integers(0, 7200, 200)],
+    }))
+    b = a.withColumnRenamed("doc_id", "event_id")
+    queries = [dict(query_id="Q", lon=0.0, lat=0.0)]
+    qcell = int(cells.encode(np.array([0.0]), np.array([0.0]), 7)[0])
+    cover = spark.createDataFrame(pd.DataFrame({
+        "query_id": "Q", "cell": cells.k_ring(qcell, 7, 2), "_qlon": 0.0, "_qlat": 0.0,
+    }))
+    frames = {
+        "grid": sj.spatial_join_grid(
+            a.drop("ts"), b.drop("ts"), res=7, dist_m=50_000.0, salt_threshold=None),
+        "grid_salted": sj.spatial_join_grid(
+            a.drop("ts"), b.drop("ts"), res=7, dist_m=50_000.0, salt_threshold=5),
+        "spacetime": sj.spatiotemporal_join_grid(
+            a, b, res=7, dist_m=50_000.0, max_dt_s=3600, unique_ids=True),
+        "dwithin": sj.dwithin_join_broadcast(
+            a.drop("ts"), [dict(center_id=q["query_id"], lon=q["lon"], lat=q["lat"])
+                           for q in queries], 100_000.0),
+        "knn_candidates": knn_op._candidates(sj.add_cell_column(b, 7), cover),
+    }
+    for name, df in frames.items():
+        assert df.count() > 0, name
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, (name, plan)
+
+
+def test_ring_cells_complete_and_unique_bruteforce(spark):
+    """The grid joins' k-ring (engine and DuckDB oracle share no code here,
+    so numpy brute force is the oracle): for random points — |lat| >= 85,
+    lon on +/-180, and coarse res where kx caps at n/2 — every ring has no
+    repeated cell, and every partner within dist_m under the numpy
+    haversine has its cell in the left row's ring."""
+    rng = np.random.default_rng(21)
+    n = 600
+    lon = rng.uniform(-180, 180, n)
+    lat = rng.uniform(-90, 90, n)
+    lat[:150] = rng.uniform(85, 90, 150) * rng.choice([-1, 1], 150)
+    lon[150:250] = rng.choice([-180.0, 180.0], 100)
+    lon[250:300] = rng.uniform(179.5, 180.0, 50)
+    pdf = pd.DataFrame({"id": np.arange(n), "lon": lon, "lat": lat})
+    df = spark.createDataFrame(pdf)
+    for res, dist_m in [(8, 50_000.0), (6, 200_000.0), (3, 2_000_000.0), (2, 5_000_000.0)]:
+        rings = sj.add_ring_cells(df, res, dist_m).select("id", "cell").toPandas()
+        assert not rings.duplicated().any(), (res, dist_m)
+        got = rings.groupby("id")["cell"].apply(set).to_dict()
+        assert set(got) == set(range(n))
+        own = cells.encode(lon, lat, res)
+        d = kernels.haversine_m(lon[:, None], lat[:, None], lon[None, :], lat[None, :])
+        ii, jj = np.nonzero(d <= dist_m)
+        missing = [(i, j) for i, j in zip(ii, jj) if own[j] not in got[i]]
+        assert not missing, (res, dist_m, missing[:5])
+    # kx caps at n/2 at coarse res near a pole: every column, once each
+    ring = sj.add_ring_cells(
+        spark.createDataFrame(pd.DataFrame({"id": [0], "lon": [10.0], "lat": [89.0]})),
+        2, 5_000_000.0,
+    ).toPandas()
+    x, _ = cells.deinterleave(ring["cell"].to_numpy())
+    assert set(x.tolist()) == {0, 1, 2, 3}
+
+    # the equator ring at res 8 / 50 km is exactly 3x3
+    eq = sj.add_ring_cells(
+        spark.createDataFrame(pd.DataFrame({"id": [0], "lon": [0.3], "lat": [0.3]})),
+        8, 50_000.0,
+    ).toPandas()
+    x, y = cells.deinterleave(eq["cell"].to_numpy())
+    own_x, own_y = cells.lonlat_to_xy(np.array([0.3]), np.array([0.3]), 8)
+    assert sorted(zip(x.tolist(), y.tolist())) == [
+        (int(own_x[0]) + dx, int(own_y[0]) + dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
+    ]

@@ -99,8 +99,9 @@ def main() -> None:
         "Want: exactly two shuffle Exchanges (one per side, hashing the "
         "composite (cell, tbin) key), one join, NO dedupe exchange after "
         "it (unique_ids split-explode: ring cells left-only, +/-1 bins "
-        "right-only, so a pair collides on exactly one key), haversine "
-        "+ |dt| refine above the join.",
+        "right-only, so a pair collides on exactly one key), no "
+        "ArrowEvalPython: the k-ring is a Catalyst sequence explode and "
+        "the haversine + |dt| refine is SQL fused into the join condition.",
         plan_of(q.q_spacetime_join(spark, sf_dir)),
         q.q_spacetime_join(spark, sf_dir),
     )
@@ -188,6 +189,8 @@ def main() -> None:
             f"PLAN REGRESSION: spacetime join has {n_st_shuf} shuffle "
             f"Exchanges (want <=2: one per side on the composite key)"
         )
+    if "ArrowEvalPython" in st_text:
+        sys.exit("PLAN REGRESSION: spacetime join crosses into Python (want none)")
 
     # REGRESSION GUARD (round-2 JIT discovery): the Morton cell encode must
     # stay a chain of small projections — expression collapse inlines the
